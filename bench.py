@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from esxsnmp_tsdb_spark import registry
 from esxsnmp_tsdb_spark.plans import plan_violations
-from esxsnmp_tsdb_spark.session import get_session
+from esxsnmp_tsdb_spark.session import codegen_compiles, get_session
 
 # One headline per operator family (SURVEY.md §2.1-§2.6).
 HEADLINE = [
@@ -144,13 +144,20 @@ def main() -> None:
         if bad:
             violations[key] = bad
 
+    # Janino compiles per query, summed over its timed reps (the counter
+    # is read outside the timed region): nonzero means those reps paid
+    # compile and JIT work on top of the engine's own.
+    compiles: dict[str, int] = {}
+
     def timed_pass(per_query: dict[str, float]) -> None:
         for key in bench_set:
             best = per_query.get(key, float("inf"))
             for _ in range(repeats):
+                c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
                 materialize(queries[key](spark, sf_dir))
                 best = min(best, time.perf_counter() - t0)
+                compiles[key] = compiles.get(key, 0) + codegen_compiles(spark) - c0
             per_query[key] = round(best, 3)
             # Keep accumulated shuffle/broadcast state of earlier queries
             # from bleeding into the next measurement (one local JVM).
@@ -229,11 +236,13 @@ def main() -> None:
             break
         for key in suspects:
             for _r in range(repeats):
+                c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
                 materialize(queries[key](spark, sf_dir))
                 per_query[key] = min(
                     per_query[key], round(time.perf_counter() - t0, 3)
                 )
+                compiles[key] += codegen_compiles(spark) - c0
             spark.sparkContext._jvm.System.gc()
 
     # Bucketed-vs-flat side-by-side (VERDICT r6 item 6 / r7 item 2): the
@@ -365,6 +374,7 @@ def main() -> None:
             # sweep shuffles op order with this seed so host steal can't
             # systematically land on one alphabetical family.
             "sweep_order_seed": sweep_seed,
+            "codegen_compiles": compiles,
         }
     )
     print(line)

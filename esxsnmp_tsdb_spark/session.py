@@ -47,7 +47,14 @@ RUNTIME_CONF: dict[str, str] = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine tuning to an externally-built session."""
+    """Apply runtime-settable engine tuning to an externally-built session.
+
+    Only :data:`RUNTIME_CONF` reaches a session built outside
+    :func:`get_session`, such as one a caller passes into
+    ``__spark_entry__``: the build-time confs (driver memory, the codegen
+    cache size) are fixed when the JVM or the session starts, so that
+    session keeps its own values for them.
+    """
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -102,11 +109,18 @@ def cluster_profile(**kwargs):
     return _profile(**kwargs)
 
 
+# Generated classes the JVM-wide codegen cache keeps (Spark's default is
+# 100).  It must hold a session's working set: ~300 classes per perfbench
+# curation round, 192 per tsdb_query round, 613 over all of bench.py's
+# headline session; the cache evicts per segment, so it stays well over
+# twice the largest.
+CODEGEN_CACHE_ENTRIES = 2048
+
+
 def _default_driver_mem() -> str:
-    """Default driver heap: 28g on big hosts, clamped to ~25% of physical
-    RAM on smaller ones (ADVICE r13: a fixed 28g default exceeds physical
-    memory on small hosts and risks a host-level OOM).  Env-overridable
-    via SPARK_GRAFT_DRIVER_MEM either way."""
+    """Default driver heap: min(28g, ~25% of physical RAM), so the default
+    never exceeds a small host's memory.  Env-overridable via
+    SPARK_GRAFT_DRIVER_MEM either way."""
     try:
         phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
         quarter_g = max(1, int(phys / 4 / (1 << 30)))
@@ -121,13 +135,10 @@ def get_session(app_name: str = "esxsnmp_tsdb_spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # 28g (was 16g; still env-overridable): a long bench/sweep session
-        # accumulates localCheckpoint blocks across hundreds of ops, and at
-        # 16g the heap hit ~5 s stop-the-world full GCs mid-measurement —
-        # measured r13 (OPTIMIZATION_r13.md): after 160 sweep ops the two
-        # largest ops read bimodal 4.5↔10.9 s at 16g, steady 4.0-5.8 s at
-        # 28g.  The sandbox has 128 GiB; on a cluster, sizing comes from
-        # cluster_profile(), not this local default.
+        # A long bench/sweep session accumulates localCheckpoint blocks
+        # across hundreds of ops; a heap too small for them stalls timed
+        # ops in stop-the-world full GCs (see _default_driver_mem).  On a
+        # cluster, sizing comes from cluster_profile(), not this default.
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
@@ -140,6 +151,8 @@ def get_session(app_name: str = "esxsnmp_tsdb_spark") -> SparkSession:
             "spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent"
         )
         .config("spark.ui.enabled", "false")
+        # Static conf: read once, when the first query compiles.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )
     for k, v in RUNTIME_CONF.items():
@@ -147,3 +160,12 @@ def get_session(app_name: str = "esxsnmp_tsdb_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far.  Each one is a miss in
+    the generated-code cache, so the count stops moving once a repeated
+    workload fits in :data:`CODEGEN_CACHE_ENTRIES`."""
+    source = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    metrics = getattr(getattr(source, "CodegenMetrics$"), "MODULE$")
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
