@@ -19,6 +19,13 @@ discoverability wrapper, not a second engine:
   batch counter, so slot-addressed overwrite (last-write-wins per slot,
   † TSDBVar.insert positional overwrite) replays deterministically through
   ``row_number`` — same semantics as operators/ingest.py `ts_merge_upsert`;
+- an append is one part file written by Arrow, not by a Spark job: under
+  the var lock it goes to a hidden temp name (leading ``.``, no
+  ``.parquet`` suffix, so neither Spark nor the file counters see it) and
+  is renamed into place; ``recover_swap`` deletes temps a crash left;
+- every per-var read and maintenance plan is single-partition from its
+  leaves (a var is one series), so its windows, joins, cascades and sorts
+  plan no Exchange and each call costs at most one Spark job per output;
 - ``select(begin, end)`` materializes never-written slots as invalid rows
   (flags=0, value NULL) on a dense spine († TSDBVar.select yielding
   invalid rows) — `sequence`-explode, the `ts_time_spine` pattern;
@@ -34,6 +41,7 @@ the operator registry depends on this module.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -377,7 +385,9 @@ class TSDBVar(_Node):
         changes, and ladder compaction).  The LWW-resolved valid rows
         are localCheckpointed once, so the per-level writes re-run only
         the cheap cascade aggregations — not the raw scan + LWW window
-        per level."""
+        per level.  Every plan is single-partition, so the call costs
+        one checkpoint job plus one write job per level, whatever the
+        core count."""
         from esxsnmp_tsdb_spark.sources.compaction import recover_swap
         from esxsnmp_tsdb_spark.sources.ladder import build_ladder
 
@@ -400,6 +410,7 @@ class TSDBVar(_Node):
                     F.lit(0).cast("long").alias("event_id"),
                 )
                 .localCheckpoint(eager=True)
+                .coalesce(1)
             )
             ladder = build_ladder(obs, levels=steps)
             for name, step in zip(names, steps):
@@ -435,7 +446,14 @@ class TSDBVar(_Node):
         reference's one-persister-per-var rule, enforced instead of
         assumed.  Each call locks its own freshly opened fd, so the
         blocking ``flock`` serializes threads within one process as well
-        as separate processes."""
+        as separate processes.
+
+        The batch is one part file written by Arrow with the exact
+        ``_ROW_SCHEMA`` types; no Spark job runs.  It is written to a
+        hidden temp name, LAST_SEQ is saved, and only then is the file
+        renamed into place: a crash before the rename leaves a temp that
+        no reader sees and ``recover_swap`` deletes, and a crash after it
+        leaves no ingest_seq that a later batch can mint again."""
         if self.is_aggregate:
             raise ValueError(
                 "aggregate vars are maintained by update_all_aggregates, "
@@ -448,10 +466,16 @@ class TSDBVar(_Node):
         ]
         if not norm:
             return
-        from esxsnmp_tsdb_spark.sources.compaction import recover_swap
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from esxsnmp_tsdb_spark.sources.compaction import (
+            APPEND_TMP_SUFFIX,
+            recover_swap,
+        )
 
         with self._locked():
-            # A parquet append would silently recreate a data dir whose
+            # An append would silently recreate a data dir whose
             # compaction died mid-swap, hiding the ._old history until
             # the next recovery deletes it — heal before writing.
             recover_swap(self._data)
@@ -461,20 +485,24 @@ class TSDBVar(_Node):
             # a strictly later counter).
             self.metadata = _read_metadata(self.fs_path)
             seq0 = int(self.metadata["LAST_SEQ"])
-            df = self.spark.createDataFrame(
-                [
-                    (t, fl, v, seq0 + 1 + i)
-                    for i, (t, v, fl) in enumerate(norm)
-                ],
-                _ROW_SCHEMA,
-            )
-            df.coalesce(1).write.mode("append").parquet(self._data)
+            tse, value, flags = zip(*norm)
+            table = pa.table({  # the exact _ROW_SCHEMA types
+                "tse": pa.array(tse, pa.int64()),
+                "flags": pa.array(flags, pa.int32()),
+                "value": pa.array(value, pa.float64()),
+                "ingest_seq": pa.array(
+                    range(seq0 + 1, seq0 + 1 + len(norm)), pa.int64()
+                ),
+            })
+            os.makedirs(self._data, exist_ok=True)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(self._data, f".{name}{APPEND_TMP_SUFFIX}")
+            pq.write_table(table, tmp)
             self.metadata["LAST_SEQ"] = str(seq0 + len(norm))
             prev_update = int(self.metadata.get("LAST_UPDATE", "0"))
-            self.metadata["LAST_UPDATE"] = str(
-                max(prev_update, max(t for (t, _v, _fl) in norm))
-            )
+            self.metadata["LAST_UPDATE"] = str(max(prev_update, max(tse)))
             self.save_metadata()
+            os.rename(tmp, os.path.join(self._data, name))
 
     def _heal(self) -> None:
         """If a compaction swap died mid-flight (data dir gone, ``._old``
@@ -507,7 +535,8 @@ class TSDBVar(_Node):
         self._heal()
         if not os.path.isdir(self._data):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(self._data)
+        # One series, one partition: every plan above it needs no Exchange.
+        return self.spark.read.schema(schema).parquet(self._data).coalesce(1)
 
     def _lww(self, df: DataFrame) -> DataFrame:
         """Last-write-wins per slot: later ingest_seq, then later tse."""
@@ -521,6 +550,22 @@ class TSDBVar(_Node):
             .filter(F.col("_rn") == 1)
             .drop("_rn", "ingest_seq")
         )
+
+    def _on_spine(self, lo: int, hi: int, present: DataFrame) -> DataFrame:
+        """Every slot in ``[lo, hi]``, left-joined to ``present`` on
+        ``slot``.  The spine is one partition like the var's rows, and
+        the join is hinted ``shuffle_hash`` (no broadcast job), so it
+        plans no Exchange."""
+        spine = self.spark.range(0, 1, 1, 1).select(
+            F.explode(
+                F.sequence(
+                    F.lit(lo).cast("long"),
+                    F.lit(hi).cast("long"),
+                    F.lit(self.step).cast("long"),
+                )
+            ).alias("slot")
+        )
+        return spine.join(present.hint("shuffle_hash"), "slot", "left")
 
     def select(
         self, begin: int, end: int, flags: int | None = None
@@ -558,17 +603,8 @@ class TSDBVar(_Node):
                 (F.col("tse") > lo - step) & (F.col("tse") < hi + step)
             )
         ).filter((F.col("slot") >= lo) & (F.col("slot") <= hi))
-        spine = self.spark.range(1).select(
-            F.explode(
-                F.sequence(
-                    F.lit(lo).cast("long"),
-                    F.lit(hi).cast("long"),
-                    F.lit(step).cast("long"),
-                )
-            ).alias("slot")
-        )
         out = (
-            spine.join(present, "slot", "left")
+            self._on_spine(lo, hi, present)
             .select(
                 F.coalesce("tse", "slot").alias("tse"),
                 F.coalesce("flags", F.lit(0)).alias("flags"),
@@ -591,16 +627,7 @@ class TSDBVar(_Node):
         present = self._rows().filter(
             (F.col("slot") >= lo) & (F.col("slot") <= hi)
         )
-        spine = self.spark.range(1).select(
-            F.explode(
-                F.sequence(
-                    F.lit(lo).cast("long"),
-                    F.lit(hi).cast("long"),
-                    F.lit(step).cast("long"),
-                )
-            ).alias("slot")
-        )
-        out = spine.join(present, "slot", "left").select(
+        out = self._on_spine(lo, hi, present).select(
             "slot",
             F.coalesce("flags", F.lit(0)).alias("flags"),
             "average",

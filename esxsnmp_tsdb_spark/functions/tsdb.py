@@ -162,7 +162,7 @@ def counter_rate(
         )
     d = deltas(obs, counter_col)
     corrected = wrap_correct(F.col("delta"), modulus)
-    rate = corrected / F.col("dt")
+    rate = F.try_divide(corrected, F.col("dt"))  # dt=0 (same second) → NULL
     if heartbeat is not None:
         rate = heartbeat_invalidate(rate, F.col("dt"), heartbeat)
         corrected = heartbeat_invalidate(corrected, F.col("dt"), heartbeat)

@@ -94,7 +94,9 @@ def ts_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "path",
         "tse",
-        F.round(F.col("delta").cast("double") / F.col("dt"), 6).alias("rate"),
+        # try_divide: two samples in one second (dt=0) rate NULL, not raise
+        F.round(F.try_divide(F.col("delta").cast("double"), F.col("dt")), 6)
+        .alias("rate"),
     )
 
 

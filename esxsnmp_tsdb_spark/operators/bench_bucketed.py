@@ -38,7 +38,8 @@ def _rate(obs: DataFrame) -> DataFrame:
     return d.select(
         "path",
         "tse",
-        F.round(F.col("delta").cast("double") / F.col("dt"), 6).alias("rate"),
+        F.round(F.try_divide(F.col("delta").cast("double"), F.col("dt")), 6)
+        .alias("rate"),
     )
 
 

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+# Suffix of an in-flight append's hidden temp file (api.TSDBVar.insert_batch):
+# not ``.parquet``, so no part-file count sees it before its rename.
+APPEND_TMP_SUFFIX = ".inflight"
 
 
 def with_day(obs: DataFrame) -> DataFrame:
@@ -76,10 +79,11 @@ def recover_swap(path: str) -> None:
     """Recover ``path`` from an interrupted :func:`compact_flat`, in
     crash-order: roll back a swap that died between its two renames
     (``._old`` restored to ``path``), then drop stale ``._compact`` /
-    ``._old`` leftovers.  MUST be called holding the store's write lock —
-    an unlocked heal cannot tell a crashed compaction from one that is
-    mid-swap right now, and would rename the live compactor's backup out
-    from under it."""
+    ``._old`` leftovers and the temp files of appends that died before
+    their rename.  MUST be called holding the store's write lock — an
+    unlocked heal cannot tell a crashed compaction or append from one
+    that is in flight right now, and would pull its files out from
+    under it."""
     import shutil
 
     tmp = path.rstrip(os.sep) + "._compact"
@@ -90,6 +94,10 @@ def recover_swap(path: str) -> None:
         shutil.rmtree(tmp)  # died before the swap — incomplete rewrite
     if os.path.isdir(old):
         shutil.rmtree(old)  # died before cleanup — swap already complete
+    if os.path.isdir(path):
+        for f in os.listdir(path):
+            if f.startswith(".") and f.endswith(APPEND_TMP_SUFFIX):
+                os.remove(os.path.join(path, f))  # append died pre-rename
 
 
 def compact_flat(
@@ -133,10 +141,11 @@ def compact_flat(
     total_bytes = sum(os.path.getsize(f) for f in part_files)
     n_files = max(1, round(total_bytes / target_file_bytes))
     reader = spark.read.schema(schema) if schema else spark.read
+    df = reader.parquet(path)
+    # One output file needs no shuffle: fold the scan's splits in place.
+    df = df.coalesce(1) if n_files == 1 else df.repartition(n_files)
     (
-        reader.parquet(path)
-        .repartition(n_files)
-        .sortWithinPartitions(*sort_cols)
+        df.sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
         .parquet(tmp)
     )

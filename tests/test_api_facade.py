@@ -4,11 +4,12 @@ get_last, slot overwrite, invalid-row materialization, metadata reload)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
 
-from esxsnmp_tsdb_spark.api import TSDB, TSDBVar
+from esxsnmp_tsdb_spark.api import _ROW_SCHEMA, TSDB, TSDBVar, _read_metadata
 from esxsnmp_tsdb_spark.functions.tsdb import ROW_HIDDEN, ROW_VALID
 
 
@@ -559,3 +560,179 @@ def test_compaction_crash_state_machine(spark, db):
     recover_swap(v3._data)
     recover_swap(v3._data)
     assert winners(v3) == {**expect, 900: 9.0}
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches (no job group is set in this suite)."""
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    fn()
+    return len(set(st.getJobIdsForGroup(None)) - before)
+
+
+def test_facade_job_budget(spark, db):
+    """A var is one series: an append launches no Spark job, each read one,
+    maintenance one per output (checkpoint + one write per level, one
+    compaction write) — whatever the session's core count."""
+    var = db.add_set("budget").add_var("octets", step=300)
+    for spec in ("+1h", "+1d"):
+        var.add_aggregate(spec)
+    var.insert_batch([(t, float(t % 7)) for t in range(0, 2 * 86400, 300)])
+    var.insert_batch([(t, 1.0) for t in range(0, 3600, 300)])  # overwrites
+    assert _jobs(spark, lambda: var.insert_batch([(2 * 86400, 5.0)])) == 0
+    assert _jobs(spark, lambda: var.select(0, 7200).collect()) == 1
+    assert _jobs(spark, lambda: var.get(600)) == 1
+    assert _jobs(spark, var.get_last) == 1
+    assert _jobs(spark, lambda: var.timerange(0, 86400, step=3600).collect()) == 1
+    levels = len(var.list_aggregates())
+    assert _jobs(spark, var.update_all_aggregates) <= levels + 1
+    assert _jobs(spark, lambda: var.timerange(0, 86400, step=7200).collect()) == 1
+    assert _jobs(spark, lambda: var.get_aggregate("+1h").select(0, 7200).collect()) == 1
+    assert _jobs(spark, var.compact) <= 1
+
+
+def test_crashed_append_temp_is_invisible_and_cleared(spark, db, monkeypatch):
+    """An append that dies between its Arrow write and its rename leaves a
+    hidden temp file in the data dir.  Reads and file counts must not see
+    it, and the next locked mutator (compact, insert) deletes it; the
+    ingest_seq values it reserved are never minted again."""
+    import os
+
+    from esxsnmp_tsdb_spark import api
+    from esxsnmp_tsdb_spark.sources.compaction import APPEND_TMP_SUFFIX
+
+    var = db.add_set("router1").add_var("tmpcrash", step=300)
+    var.insert_batch([(0, 1.0), (300, 2.0)])
+    var.insert(600, 3.0)
+
+    def crash(*_a):
+        raise OSError("simulated crash before rename")
+
+    def crash_append(rows):
+        with monkeypatch.context() as m:
+            m.setattr(api.os, "rename", crash)
+            with pytest.raises(OSError, match="simulated"):
+                var.insert_batch(rows)
+
+    def temps():
+        return [f for f in os.listdir(var._data) if f.endswith(APPEND_TMP_SUFFIX)]
+
+    def winners():
+        return {r.slot: r.value for r in var.select(0, 1200).collect()
+                if r.flags != 0}
+
+    crash_append([(310, 99.0), (900, 99.0)])
+    assert len(temps()) == 1
+    assert winners() == {0: 1.0, 300: 2.0, 600: 3.0}
+    assert var.get_last().value == 3.0
+    assert var.file_count() == 2
+    var.compact()
+    assert temps() == []
+    assert var.file_count() == 1
+    assert winners() == {0: 1.0, 300: 2.0, 600: 3.0}
+
+    crash_append([(900, 98.0)])
+    assert len(temps()) == 1
+    var.insert(900, 4.0)  # the locked heal drops the stale temp first
+    assert temps() == []
+    assert winners() == {0: 1.0, 300: 2.0, 600: 3.0, 900: 4.0}
+    seqs = [r.ingest_seq for r in var._rows().collect()]
+    assert len(seqs) == len(set(seqs))
+
+
+def _spark_append(var, rows) -> None:
+    """Append one batch the way Spark-written stores hold it: a
+    ``createDataFrame(...).coalesce(1).write`` part file plus its _SUCCESS
+    and .crc siblings, numbered from the var's LAST_SEQ."""
+    with var._locked():
+        var.metadata = _read_metadata(var.fs_path)
+        seq0 = int(var.metadata["LAST_SEQ"])
+        data = [(t, ROW_VALID, v, seq0 + 1 + i) for i, (t, v) in enumerate(rows)]
+        var.spark.createDataFrame(data, _ROW_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(var._data)
+        var.metadata["LAST_SEQ"] = str(seq0 + len(rows))
+        var.metadata["LAST_UPDATE"] = str(max(
+            int(var.metadata.get("LAST_UPDATE", "0")), max(t for t, _ in rows)
+        ))
+        var.save_metadata()
+
+
+def test_mixed_spark_and_arrow_layout(spark, db):
+    """A store whose data dir holds Spark-written part files plus
+    Arrow-written ones answers select, get_last and the aggregate ladder
+    exactly like an all-Arrow var fed the same batches — before and after
+    compaction.  Overwrites cross the layouts in both directions."""
+    grp = db.add_set("mixed")
+    mixed = grp.add_var("old", step=300)
+    fresh = grp.add_var("new", step=300)
+    for v in (mixed, fresh):
+        v.add_aggregate("+1h")
+    history = [(t, float(t % 1300)) for t in range(0, 4 * 3600, 300)]
+    later = [(310, 7.0), (3900, 8.0)]
+    again = [(320, 6.0), (7300, 5.0)]
+    _spark_append(mixed, history)
+    _spark_append(mixed, later)
+    fresh.insert_batch(history)
+    fresh.insert_batch(later)
+    for v in (mixed, fresh):
+        v.insert_batch(again)
+        v.update_all_aggregates()
+    assert any(f.startswith("_SUCCESS") for f in os.listdir(mixed._data))
+
+    def answers(v):
+        sel = sorted(tuple(r) for r in v.select(0, 5 * 3600).collect())
+        agg = sorted(tuple(r) for r in
+                     v.get_aggregate("+1h").select(0, 5 * 3600).collect())
+        return sel, tuple(v.get_last()), agg
+
+    want = answers(fresh)
+    # slot 300: the Arrow batch beat both Spark batches
+    assert fresh.get(300).value == 6.0
+    assert answers(mixed) == want
+    mixed.compact()
+    assert mixed.file_count() == 1
+    assert answers(mixed) == want
+    mixed.update_all_aggregates()
+    assert answers(mixed) == want
+
+
+def test_concurrent_appends_mint_unique_seqs(spark, db):
+    """More appending threads than cores, each through its own handle:
+    the flock serializes the LAST_SEQ read-modify-write and the
+    temp-write/rename, so every row lands once with its own ingest_seq
+    and no temp file is left behind."""
+    import sys
+    import threading
+
+    from esxsnmp_tsdb_spark.sources.compaction import APPEND_TMP_SUFFIX
+
+    db.add_set("stress").add_var("octets", step=300)
+    n_threads, n_batches = 2 * (os.cpu_count() or 2), 10
+
+    def writer(w):
+        var = db.get_var("stress/octets")
+        for b in range(n_batches):
+            var.insert_batch([(300 * (w * n_batches + b), float(w)),
+                              (300 * (w * n_batches + b) + 1, float(b))])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,))
+                   for w in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+
+    var = db.get_var("stress/octets")
+    n_rows = 2 * n_threads * n_batches
+    seqs = sorted(r.ingest_seq for r in var._rows().collect())
+    assert seqs == list(range(1, n_rows + 1))
+    assert var.metadata["LAST_SEQ"] == str(n_rows)
+    assert var.file_count() == n_threads * n_batches
+    assert not any(f.endswith(APPEND_TMP_SUFFIX) for f in os.listdir(var._data))
